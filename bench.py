@@ -52,6 +52,7 @@ def _cross_evals(spark, sf_dir: str) -> dict[str, float]:
     small join/agg jobs, never a recompute of the operators it grades."""
     from pyspark.sql import functions as F
 
+    from spark_ml_algo_lib_master_tongji_spark import derive
     from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog
 
     cat = Catalog(spark, sf_dir)
@@ -130,15 +131,12 @@ def _cross_evals(spark, sf_dir: str) -> dict[str, float]:
         from spark_ml_algo_lib_master_tongji_spark.operators.dedup import (
             semdedup_k,
         )
-        from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-            _derived_scalar,
-        )
         from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import (
             _points_shared,
             lloyd_ivf_agreement as agreement,
         )
 
-        n = _derived_scalar(
+        n = derive.value(
             cat, "embeddings_count", lambda: _points_shared(cat).count()
         )
         return agreement(cat, semdedup_k(n))
@@ -152,15 +150,12 @@ def _cross_evals(spark, sf_dir: str) -> dict[str, float]:
         from spark_ml_algo_lib_master_tongji_spark.operators.dedup import (
             semdedup_k,
         )
-        from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-            _derived_scalar,
-        )
         from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import (
             _points_shared,
             lloyd_ivf_agreement as agreement,
         )
 
-        n = _derived_scalar(
+        n = derive.value(
             cat, "embeddings_count", lambda: _points_shared(cat).count()
         )
         k = semdedup_k(n)
@@ -235,7 +230,7 @@ def main() -> None:
 
     for name, fn in build_registry().items():
         # loadDataTime/costTime split (``KMeansRunner.scala:132-133,156``):
-        # the _derived* caches report each session-shared derivation build
+        # the derive memo reports each session-shared derivation build
         # to benchlib; the tally delta around a query is its "load" (paid
         # once, on first touch), wall − load its "cost" — so per-query cost
         # numbers are comparable across runs regardless of registry order.

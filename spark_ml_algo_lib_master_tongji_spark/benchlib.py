@@ -19,9 +19,9 @@ Two concerns live here because every timing entry point needs both:
    "load" is the session-shared derivation build (graph edge lists, feature
    assembly, fitted models): whichever query touches a derivation first pays
    its full materialization, which made per-query numbers run-order-dependent
-   (PLANS.md gbt post-mortem: 13.3s cold vs 0.7s shared). The ``_derived*``
-   caches report each build here; bench diffs the tally around each query to
-   split wall time into {load, cost}.
+   (PLANS.md gbt post-mortem: 13.3s cold vs 0.7s shared). The ``derive``
+   memo reports each build here; bench diffs ``load_seconds`` around each
+   query to split wall time into {load, cost}.
 """
 
 from __future__ import annotations
@@ -57,29 +57,18 @@ def materialize(df: DataFrame, collect_first: bool = False):
             df.unpersist(blocking=False)
 
 
-#: derivation name → cumulative build seconds (process-global; per-name
-#: attribution detail — note these are THREAD-seconds: concurrent builds
-#: each record their own duration here. ``load_seconds`` below is the
-#: wall-clock aggregate bench diffs around each query).
-LOAD_TALLY: dict[str, float] = {}
-
-#: nesting depth is PER-THREAD (a build on thread A must not suppress a
-#: concurrent build on thread B), and the shared tally dict is written
-#: under a lock — parallel pytest workers in one process or a threaded
-#: driver would otherwise corrupt the depth and misattribute load time
-#: between queries (round-5 ADVICE).
-_local = threading.local()
-_tally_lock = threading.Lock()
-
 # Wall-clock load-region accounting (round-14 verdict item 6): the anchor
 # rows build several derivations CONCURRENTLY from a thread pool, so
 # summing per-build durations counted thread-seconds — 57.6s of "load"
 # inside a 13.8s query wall, driving costTime = wall − load negative.
-# Instead, overlapping outermost builds are merged into one wall-clock
-# region: the first build to start (across ALL threads) opens the region,
-# the last to finish closes it, and ``load_seconds`` reports total region
-# time — so wall − load ≥ 0 holds for pooled rows, and purely sequential
-# builds report exactly what the per-duration sum did.
+# Instead, overlapping builds are merged into one wall-clock region: the
+# first build to start (across ALL threads) opens the region, the last to
+# finish closes it, and ``load_seconds`` reports total region time — so
+# wall − load ≥ 0 holds for pooled rows, and a build nested inside another
+# (``copurchase_pairs`` touches ``sym_copurchase`` inside its own build)
+# is counted once. The region state is shared by every thread, so it is
+# written under a lock (round-5 ADVICE).
+_tally_lock = threading.Lock()
 _active_builds = 0
 _region_start = 0.0
 _region_total = 0.0
@@ -87,30 +76,19 @@ _region_total = 0.0
 
 @contextlib.contextmanager
 def load_timer(name: str):
-    """Time a derivation build; only the OUTERMOST build on this thread
-    records (builds nest — ``copurchase_pairs`` touches ``sym_copurchase``
-    inside its own build — and recording both would double-count the
-    shared load)."""
+    """Time the build of derivation ``name`` into ``load_seconds``."""
     global _active_builds, _region_start, _region_total
-    outermost = getattr(_local, "depth", 0) == 0
-    _local.depth = getattr(_local, "depth", 0) + 1
-    if outermost:
-        with _tally_lock:
-            _active_builds += 1
-            if _active_builds == 1:
-                _region_start = time.perf_counter()
-    t0 = time.perf_counter()
+    with _tally_lock:
+        _active_builds += 1
+        if _active_builds == 1:
+            _region_start = time.perf_counter()
     try:
         yield
     finally:
-        dt = time.perf_counter() - t0
-        _local.depth -= 1
-        if _local.depth == 0:
-            with _tally_lock:
-                LOAD_TALLY[name] = LOAD_TALLY.get(name, 0.0) + dt
-                _active_builds -= 1
-                if _active_builds == 0:
-                    _region_total += time.perf_counter() - _region_start
+        with _tally_lock:
+            _active_builds -= 1
+            if _active_builds == 0:
+                _region_total += time.perf_counter() - _region_start
 
 
 def load_seconds() -> float:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.rounding import round_half_up
 
 from spark_ml_algo_lib_master_tongji_spark.functions import text as TXT
@@ -153,9 +154,7 @@ def _minhash_pairs(cat: Catalog) -> DataFrame:
     the pair listing (``dedup_minhash_lsh``) and the group canonicalization
     (``dedup_minhash_groups``); the per-invocation shingle/signature
     persists below therefore happen once per session, not per query."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(cat, "minhash_dup_pairs", lambda: _minhash_pairs_build(cat))
+    return derive.frame(cat, "minhash_dup_pairs", lambda: _minhash_pairs_build(cat))
 
 
 def dedup_minhash_lsh(cat: Catalog) -> DataFrame:
@@ -169,9 +168,7 @@ def doc_shingles(cat: Catalog) -> DataFrame:
     minhash pipeline, the prefix-filtered n-gram Jaccard, and the
     decontamination overlap join all start from this identical projection
     (round 5: previously each ran its own tokenize+gram pass)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(
+    return derive.frame(
         cat,
         "doc_shingles",
         lambda: shingle_sets(spread(cat.documents.select("doc_id", "text"))),
@@ -459,9 +456,6 @@ def pipeline_semantic_dedup(
     from spark_ml_algo_lib_master_tongji_spark.functions.vectors import (
         as_double_array,
     )
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
     from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import (
         kmeans_lloyd,
     )
@@ -475,7 +469,7 @@ def pipeline_semantic_dedup(
     pts = spread(cat.embeddings).select(
         "vec_id", as_double_array("embedding").alias("v")
     )
-    n = _derived_scalar(cat, "embeddings_count", lambda: pts.count())
+    n = derive.value(cat, "embeddings_count", lambda: pts.count())
     grp = pts.join(kmeans_lloyd(cat, k=semdedup_k(n)), "vec_id")
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -543,12 +537,10 @@ def dedup_minhash_groups(cat: Catalog) -> DataFrame:
     themselves. Scale: the component loop runs on the *pair graph* —
     collision-bounded, tiny relative to the corpus — never on documents.
 
-    The finished mapping is session-shared (``_derived``): the
+    The finished mapping is session-shared (``derive.frame``): the
     training-mix pipeline filters on this exact relation, so the
     component loop runs once per session."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(cat, "minhash_groups", lambda: _minhash_groups_build(cat))
+    return derive.frame(cat, "minhash_groups", lambda: _minhash_groups_build(cat))
 
 
 def _minhash_groups_build(cat: Catalog) -> DataFrame:
@@ -650,7 +642,6 @@ def dedup_winnow_pairs(cat: Catalog) -> DataFrame:
     is fp-count-linear. Same blocking discipline as the LSH band-bucket
     and prefix-filter paths; fixture sizing (sf0.01): max df 9, the cap
     keeps all 50 true re-crawl pairs."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
     from spark_ml_algo_lib_master_tongji_spark.operators.text_analysis import (
         winnow_fp_stream,
     )
@@ -660,7 +651,7 @@ def dedup_winnow_pairs(cat: Catalog) -> DataFrame:
     # (df count, both posting-list sides); one cached row stream serves
     # all of them — and the single-Generate shape in winnow_fp_stream is
     # what keeps the interpreted HOF tree evaluated once per row.
-    fps = _derived(
+    fps = derive.frame(
         cat,
         "winnow_fps_recrawl",
         lambda: winnow_fp_stream(spread(_docs_with_recrawl(cat))),
@@ -1224,8 +1215,6 @@ def _dedup_index(cat: Catalog) -> DedupIndex:
     import os
     import tempfile
 
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
-
     def build() -> DedupIndex:
         import shutil
 
@@ -1250,7 +1239,7 @@ def _dedup_index(cat: Catalog) -> DedupIndex:
         base = spread(cat.documents.select("doc_id", "text"))
         if not env_root:
             # session-private path (app id in the key): a cleared
-            # _derived_obj cache re-lands here and the store sinks are
+            # derive memo re-lands here and the store sinks are
             # errorifexists by design, so drop our own previous store.
             shutil.rmtree(path, ignore_errors=True)
             return build_dedup_index(base, path, shingles=doc_shingles(cat))
@@ -1264,7 +1253,7 @@ def _dedup_index(cat: Catalog) -> DedupIndex:
         _publish_store(tmp, path)
         return DedupIndex(cat.spark, [path])
 
-    return _derived_obj(cat, "dedup_index", build)
+    return derive.value(cat, "dedup_index", build)
 
 
 #: Bump when the store's on-disk layout changes (tables, schemas, or the

@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.operators.graph import _bc, _cached
 from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import _points
 from spark_ml_algo_lib_master_tongji_spark.operators.pairs import (
@@ -117,9 +118,7 @@ def _eps_arm(cat: Catalog, name: str, pts: DataFrame) -> tuple[str, list[int]]:
     gate histogram runs once per point set, not once per ``_eps_pairs``
     caller (round-6 verdict nit 2 — ``ml_dbscan_grid_neighbors`` paid the
     histogram again after the dbscan family already measured it)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
-
-    return _derived_obj(cat, f"eps_arm_{name}", lambda: _eps_dispatch(pts))
+    return derive.value(cat, f"eps_arm_{name}", lambda: _eps_dispatch(pts))
 
 
 def _eps_pairs(
@@ -210,9 +209,7 @@ def _dbscan_derived(cat: Catalog) -> DataFrame:
     are two registry queries over one clustering — run the ε-join + CC
     loop once, like the reference computes the model once and reports
     multiple evaluation rows (``DBSCANRunner.scala:61-72``)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(cat, "dbscan_result", lambda: dbscan(cat))
+    return derive.frame(cat, "dbscan_result", lambda: dbscan(cat))
 
 
 def ml_dbscan(cat: Catalog) -> DataFrame:
@@ -238,7 +235,6 @@ def _grid_points(cat: Catalog) -> DataFrame:
     (vec_id, [v₀·15, v₁·15]): a clusterable-occupancy point set derived
     from fixture data (≈12ε extent per axis → ~100 occupied ε-cells), the
     regime the grid candidate arm exists for."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
 
     def build() -> DataFrame:
         p = _points(cat)
@@ -249,7 +245,7 @@ def _grid_points(cat: Catalog) -> DataFrame:
             ).alias("v"),
         )
 
-    return _derived(cat, "dbscan_grid_points", build)
+    return derive.frame(cat, "dbscan_grid_points", build)
 
 
 def ml_dbscan_grid_neighbors(cat: Catalog) -> DataFrame:

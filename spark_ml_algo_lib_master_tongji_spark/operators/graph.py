@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from spark_ml_algo_lib_master_tongji_spark import benchlib
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.rounding import round_half_up
 from spark_ml_algo_lib_master_tongji_spark.plans.iterative import (
     iterate,
@@ -68,84 +68,6 @@ INF = 10**15
 # ---- graph derivations -----------------------------------------------------
 
 
-# Session-scoped cache of the fixture-graph derivations: every graph query
-# starts from the same lineitem self-join, and the registry/driver run many
-# queries against one session — materializing the derivation once is the
-# "load the graph, then run algorithms on it" lifecycle of the reference
-# (edges loaded once per runner, ``graph/Util.scala:106-136``).
-_DERIV_CACHE: dict[tuple, DataFrame] = {}
-
-# The anchor rows submit their independent seeded fits from a thread pool
-# (guide §2.6 back-fill — see ml_estimators.ml_est_clf_acc_anchors), so the
-# check-then-set memoization below must be safe under concurrent callers:
-# a global guard protects the cache dicts + the per-key lock table, and each
-# build runs under its per-key lock so two threads asking for the same
-# derivation never build it twice (double-checked locking). Builds nest
-# (X's build may pull dependency Y) but the dependency graph is a DAG, so
-# per-key locks cannot deadlock.
-import threading as _threading
-
-_CACHE_GUARD = _threading.Lock()
-_KEY_LOCKS: dict[tuple, _threading.Lock] = {}
-
-
-def _key_lock(key: tuple) -> _threading.Lock:
-    with _CACHE_GUARD:
-        return _KEY_LOCKS.setdefault(key, _threading.Lock())
-
-
-def _evict_dead_sessions(app_id: str) -> None:
-    """Drop cache entries keyed to a stopped session's applicationId.
-
-    Multi-session processes (pytest creates/stops several sessions) would
-    otherwise pin stale DataFrames, scalars, fitted models, and — worst —
-    driver-side CSR broadcasts holding O(|E|) numpy arrays for the process
-    lifetime (round-4 ADVICE). Eviction is lazy: triggered on the first
-    cache miss under a new applicationId; releasing the Python references
-    is sufficient (the dead session's JVM-side blocks died with its
-    SparkContext)."""
-    with _CACHE_GUARD:
-        for cache in (_DERIV_CACHE, _SCALAR_CACHE, _OBJ_CACHE, _KEY_LOCKS):
-            for key in [k for k in cache if k[0] != app_id]:
-                cache.pop(key, None)
-
-
-def _derived(cat: Catalog, name: str, build) -> DataFrame:
-    # Keyed by applicationId, not id(spark): a stopped session's id() can be
-    # reused by a new session, which would hand out cached DataFrames bound
-    # to a dead SparkContext (round-1 ADVICE).
-    key = (cat.spark.sparkContext.applicationId, cat.sf_dir, name)
-    if key in _DERIV_CACHE:  # lock-free fast path (CPython dict reads are atomic)
-        return _DERIV_CACHE[key]
-    with _key_lock(key):
-        if key in _DERIV_CACHE:
-            return _DERIV_CACHE[key]
-        _evict_dead_sessions(key[0])
-        with benchlib.load_timer(name):
-            df = build().persist(StorageLevel.MEMORY_AND_DISK)
-            # Eager materialization: the build IS the reference's
-            # loadDataTime (``KMeansRunner.scala:132-133``); counting here
-            # (one cheap aggregation over rows the first consumer needs
-            # anyway) makes the load/cost split in bench.py real instead of
-            # attributing the whole build to whichever query's first action
-            # touches the cache. If the count fails, the fresh persist must
-            # be released before the exception escapes, or a failed build
-            # leaves stray MEMORY_AND_DISK partitions pinned for the
-            # session (round-5 ADVICE — same failure-path rule as
-            # benchlib.materialize).
-            try:
-                df.count()
-            except Exception:
-                df.unpersist(blocking=False)
-                raise
-        # Insert under the guard: _evict_dead_sessions iterates these dicts
-        # under _CACHE_GUARD, and a concurrent unguarded insert could raise
-        # "dict changed size during iteration" in the evicting thread.
-        with _CACHE_GUARD:
-            _DERIV_CACHE[key] = df
-    return _DERIV_CACHE[key]
-
-
 def copurchase_pairs(cat: Catalog) -> DataFrame:
     """Canonical undirected part co-purchase edges (src < dst, cnt ≥ 1).
 
@@ -157,7 +79,7 @@ def copurchase_pairs(cat: Catalog) -> DataFrame:
     both shapes (the symmetric cnt(x→y) equals the canonical cnt(x,y):
     each unordered lineitem row pair appears exactly once per direction
     in the self-join product)."""
-    return _derived(
+    return derive.frame(
         cat,
         "copurchase_pairs",
         lambda: sym_copurchase(cat).where(F.col("src") < F.col("dst")),
@@ -210,7 +132,7 @@ def sym_copurchase(cat: Catalog) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    return _derived(cat, "sym_copurchase", build)
+    return derive.frame(cat, "sym_copurchase", build)
 
 
 def vertices(edges: DataFrame) -> DataFrame:
@@ -218,56 +140,14 @@ def vertices(edges: DataFrame) -> DataFrame:
     return edges.select(F.col("src").alias("v")).distinct()
 
 
-# Session-scoped scalar memo (vertex counts and similar single numbers that
-# several queries re-derive with a full job each).
-_SCALAR_CACHE: dict[tuple, int] = {}
-
-
-def _derived_scalar(cat: Catalog, name: str, compute):
-    key = (cat.spark.sparkContext.applicationId, cat.sf_dir, name)
-    if key in _SCALAR_CACHE:
-        return _SCALAR_CACHE[key]
-    with _key_lock(key):
-        if key not in _SCALAR_CACHE:
-            _evict_dead_sessions(key[0])
-            with benchlib.load_timer(name):
-                val = compute()
-            with _CACHE_GUARD:  # see the insert note in _derived
-                _SCALAR_CACHE[key] = val
-    return _SCALAR_CACHE[key]
-
-
-# Session-scoped memo for fitted models and other driver-side objects
-# (same keying as ``_derived``): when two registry queries train the
-# byte-identical seeded estimator on the same input — the explicit ALS of
-# the mse and recommend surfaces, the binary GBT of the classifier and
-# xgboost-fallback workloads — one fit serves both, the model analogue of
-# the reference's load-once-run-many lifecycle.
-_OBJ_CACHE: dict[tuple, object] = {}
-
-
-def _derived_obj(cat: Catalog, name: str, build):
-    key = (cat.spark.sparkContext.applicationId, cat.sf_dir, name)
-    if key in _OBJ_CACHE:
-        return _OBJ_CACHE[key]
-    with _key_lock(key):
-        if key not in _OBJ_CACHE:
-            _evict_dead_sessions(key[0])
-            with benchlib.load_timer(name):
-                obj = build()
-            with _CACHE_GUARD:  # see the insert note in _derived
-                _OBJ_CACHE[key] = obj
-    return _OBJ_CACHE[key]
-
-
 def copurchase_verts(cat: Catalog) -> DataFrame:
     """Session-shared distinct vertex set of the co-purchase graph."""
-    return _derived(cat, "copurchase_verts", lambda: vertices(sym_copurchase(cat)))
+    return derive.frame(cat, "copurchase_verts", lambda: vertices(sym_copurchase(cat)))
 
 
 def copurchase_n_verts(cat: Catalog) -> int:
     """Session-shared |V| of the co-purchase graph (one count, memoized)."""
-    return _derived_scalar(
+    return derive.value(
         cat, "copurchase_n_verts", lambda: copurchase_verts(cat).count()
     )
 
@@ -293,7 +173,7 @@ def pr_share_edges(cat: Catalog, weighted: bool) -> DataFrame:
             .repartition("dst")
         )
 
-    return _derived(cat, f"pr_share_edges_{'w' if weighted else 'u'}", build)
+    return derive.frame(cat, f"pr_share_edges_{'w' if weighted else 'u'}", build)
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -309,7 +189,7 @@ def copurchase_degrees(cat: Catalog) -> DataFrame:
     """Session-shared (v, deg, wdeg) over the co-purchase graph — the
     degree query and Louvain's loop seed / Q-gate input are the same
     exchange-free aggregation over the src-partitioned shared edge list."""
-    return _derived(cat, "copurchase_degrees", lambda: degrees(sym_copurchase(cat)))
+    return derive.frame(cat, "copurchase_degrees", lambda: degrees(sym_copurchase(cat)))
 
 
 def nation_trade_weighted(cat: Catalog) -> DataFrame:
@@ -336,13 +216,13 @@ def nation_trade_weighted(cat: Catalog) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("w"))
         )
 
-    return _derived(cat, "nation_trade_weighted", build)
+    return derive.frame(cat, "nation_trade_weighted", build)
 
 
 def nation_trade_edges(cat: Catalog) -> DataFrame:
     """Directed nation→nation trade edges (src, dst), distinct, self-loops
     dropped — the weight projection of the shared weighted derivation."""
-    return _derived(
+    return derive.frame(
         cat,
         "nation_trade_edges",
         lambda: nation_trade_weighted(cat).select("src", "dst"),
@@ -1275,7 +1155,7 @@ def copurchase_csr(cat: Catalog):
     ((broadcast, n_vertices)). Sampled betweenness and the subgraph-match
     kernel ship the identical adjacency; one driver materialization +
     broadcast serves both (callers must NOT unpersist it)."""
-    return _derived_scalar(
+    return derive.value(
         cat, "copurchase_csr", lambda: csr_broadcast(copurchase_pairs(cat))
     )
 
@@ -1493,7 +1373,7 @@ def graph_mssp(cat: Catalog) -> DataFrame:
 def lpa_communities(cat: Catalog) -> DataFrame:
     """Session-shared LPA labeling — ``graph_modularity`` scores this very
     assignment, so the LPA_ITERS loop runs once per session, not twice."""
-    return _derived(
+    return derive.frame(
         cat, "lpa_labels", lambda: label_propagation(sym_copurchase(cat))
     )
 
@@ -1516,7 +1396,7 @@ def copurchase_triangles(cat: Catalog) -> DataFrame:
         csr = copurchase_csr(cat) if pairs.count() <= ADJ_BC_MAX_EDGES else None
         return triangles(pairs, csr=csr)
 
-    return _derived(cat, "copurchase_triangles", build)
+    return derive.frame(cat, "copurchase_triangles", build)
 
 
 def graph_triangle_count(cat: Catalog) -> DataFrame:
@@ -1539,7 +1419,7 @@ def copurchase_edge_stats(cat: Catalog) -> tuple[int, float]:
         ).collect()[0]
         return (int(r["m"]), float(r["w"] or 0.0))
 
-    return _derived_scalar(cat, "copurchase_edge_stats", compute)
+    return derive.value(cat, "copurchase_edge_stats", compute)
 
 
 def graph_modularity(cat: Catalog) -> DataFrame:
@@ -1556,7 +1436,7 @@ def _nation_closure(cat: Catalog) -> DataFrame:
     """Session-shared min-plus closure of the nation trade graph: its pair
     set IS the transitive closure, so closeness (distances) and SCC
     (mutual reachability) both read one materialized loop."""
-    return _derived(
+    return derive.frame(
         cat,
         "nation_minplus_closure",
         lambda: min_plus_closure(nation_trade_edges(cat)),

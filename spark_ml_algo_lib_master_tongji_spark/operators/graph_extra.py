@@ -10,12 +10,11 @@ the input and carries an exact unrolled-SQL oracle in ``graph_oracles``.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.rounding import round_half_up
 from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
     CC_ITERS,
@@ -23,7 +22,6 @@ from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
     RESET,
     _bc,
     _cached,
-    _derived,
     _pagerank_loop,
     copurchase_degrees,
     copurchase_pairs,
@@ -545,7 +543,7 @@ def louvain(cat: Catalog) -> DataFrame:
 def _n2v_adj(cat: Catalog) -> DataFrame:
     """Session-shared sorted adjacency lists (v, nbrs) — the walk tables of
     all three node2vec queries start from this one collect_list pass."""
-    return _derived(
+    return derive.frame(
         cat,
         "n2v_adj",
         lambda: sym_copurchase(cat)
@@ -564,10 +562,10 @@ def node2vec_walks(cat: Catalog) -> DataFrame:
     the node2vec bias). WALKS_PER_NODE walks of WALK_LEN steps from every
     vertex; neighbor lists sorted by id and indexed by the mix mod degree.
 
-    The finished corpus is session-shared (``_derived``): the Word2Vec fit
+    The finished corpus is session-shared (``derive.frame``): the Word2Vec fit
     of ``node2vec_embeddings`` consumes the identical walk table, so the
     loop runs once per session, not once per query."""
-    return _derived(cat, "n2v_uniform_walks", lambda: _uniform_walks(cat))
+    return derive.frame(cat, "n2v_uniform_walks", lambda: _uniform_walks(cat))
 
 
 def _uniform_walks(cat: Catalog) -> DataFrame:
@@ -717,28 +715,18 @@ def node2vec_biased_walks(cat: Catalog) -> DataFrame:
     return out
 
 
-#: Word2Vec training-partition lever — the scale knob of the one
-#: fit-bound node2vec row (round-13 verdict item 4 → proven by
-#: ``tools/node2vec_fit_ab.py`` at the 10× fixture, PLANS round-14
-#: addendum 5: numPartitions 1→8 cuts the fit 1.9× while keeping 2.8×
-#: more neighbor structure than a mere re-seed of the serial fit).
-#: Default 1 (spark.ml's own default): all gradient updates apply in one
-#: partition, so the fitted VECTORS are seed-deterministic — the pytest
-#: quality pins rely on that. At cluster scale set
-#: ``SPARK_GRAFT_W2V_PARTITIONS`` toward the executor count; each
-#: partition then trains Hogwild-style. The DECLARED query output
-#: (n_nodes, dim) is partition-invariant either way: with minCount=1 the
-#: vocabulary is exactly the distinct walk nodes, a pure function of the
-#: deterministic walk corpus.
-W2V_PARTITIONS = int(_os.environ.get("SPARK_GRAFT_W2V_PARTITIONS", "1"))
+#: Word2Vec training partitions. 1 (spark.ml's own default) applies all
+#: gradient updates in one partition, so the fitted vectors are
+#: seed-deterministic — the pytest quality pins rely on that.
+W2V_PARTITIONS = 1
 
 
 def node2vec_embeddings(cat: Catalog) -> DataFrame:
     """Word2Vec skip-gram over the deterministic walks → one summary row
     (n_nodes, dim). The walk corpus is exact (see ``node2vec_walks``); the
     embedding fit is seeded spark.ml Word2Vec (``saveNode2VecModel``
-    surface, ``graph/Util.scala:203-208``) with the ``W2V_PARTITIONS``
-    scale lever (default serial — see the constant's note)."""
+    surface, ``graph/Util.scala:203-208``) on ``W2V_PARTITIONS`` partitions
+    (serial — see the constant's note)."""
     from pyspark.ml.feature import Word2Vec
 
     walks = node2vec_walks(cat)
@@ -994,13 +982,11 @@ def graph_weak_cliques(cat: Catalog) -> DataFrame:
 
 
 def graph_louvain(cat: Catalog) -> DataFrame:
-    """Session-shared (``_derived``): the registry query and bench's
+    """Session-shared (``derive.frame``): the registry query and bench's
     ``louvain_modularity_q`` evaluation scalar both read this labeling —
     one two-level Louvain run serves both (the reference's runner also
     reports (Q, communities) from one run, ``LouvainRunner.scala:92-99``)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(cat, "louvain_communities", lambda: louvain(cat))
+    return derive.frame(cat, "louvain_communities", lambda: louvain(cat))
 
 
 def graph_node2vec_walks(cat: Catalog) -> DataFrame:

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.vectors import as_double_array
 from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog, spread
 
@@ -280,13 +281,12 @@ def _knn_hits_derived(cat: Catalog) -> DataFrame:
     (session, sf_dir): the neighbor table and the classifier vote are two
     registry queries over one search (the reference searches once and
     evaluates both, ``KNNRunner.scala:181-218``)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
 
     def build() -> DataFrame:
         corpus, queries = _corpus_queries(cat)
         return knn_search(corpus, queries)
 
-    return _derived(cat, "knn_hits", build)
+    return derive.frame(cat, "knn_hits", build)
 
 
 def ml_knn_spilltree(cat: Catalog) -> DataFrame:
@@ -373,13 +373,12 @@ def _ivf_hits_derived(cat: Catalog) -> DataFrame:
     (session, sf_dir): the approximate-neighbor table and the recall
     anchor are two registry queries over ONE search — without the cache
     each paid its own pivot collect + cogroup stage (round-10 verdict)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
 
     def build() -> DataFrame:
         corpus, queries = _corpus_queries(cat)
         return ivf_search(corpus, queries)
 
-    return _derived(cat, "ivf_hits", build)
+    return derive.frame(cat, "ivf_hits", build)
 
 
 def sim_ivf_topk(cat: Catalog) -> DataFrame:

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.text import tokens
 from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import PS_MIN_SUPPORT
 from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog, spread
@@ -76,13 +77,11 @@ RDD_ARM_SAMPLE = float(_os.environ.get("SPARK_GRAFT_RDD_ARM_SAMPLE", "0.2"))
 def _features(cat: Catalog) -> DataFrame:
     """(vec_id, features vector, label int, bin_label, y double).
 
-    Session-shared (``_derived``): ~12 estimator workloads fit on this
+    Session-shared (``derive.frame``): ~12 estimator workloads fit on this
     exact relation, and several fits make multiple passes over it — one
     persisted assembly is the reference's load-once-run-many lifecycle
     (§3.1) instead of a parquet re-read + vector re-assembly per query."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(
+    return derive.frame(
         cat,
         "ml_features",
         lambda: spread(cat.embeddings).select(
@@ -102,9 +101,6 @@ def _shared_clf_acc(cat: Catalog, key: str, label_col: str, fit) -> float:
     plain metric query and the ``ml_est_clf_acc_anchors`` row consume the
     SAME fit's scalar (the ``_kmeans_est_cost`` load-once-run-many
     pattern; one fit + one agg per (session, sf_dir, model))."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
 
     def compute() -> float:
         df = _features(cat)
@@ -120,24 +116,17 @@ def _shared_clf_acc(cat: Catalog, key: str, label_col: str, fit) -> float:
         )
         return round(float(row["acc"]), 4)
 
-    return _derived_scalar(cat, key, compute)
+    return derive.value(cat, key, compute)
 
 
 def _features_n(cat: Catalog) -> int:
     """Session-shared row count of the feature relation."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
-
-    return int(_derived_scalar(cat, "ml_features_n", lambda: float(_features(cat).count())))
+    return int(derive.value(cat, "ml_features_n", lambda: float(_features(cat).count())))
 
 
 def _shared_reg_rmse(cat: Catalog, key: str, label_col: str, fit) -> float:
     """Session-shared train RMSE of a seeded regressor fit (see
     ``_shared_clf_acc``)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
 
     def compute() -> float:
         df = _features(cat)
@@ -150,7 +139,7 @@ def _shared_reg_rmse(cat: Catalog, key: str, label_col: str, fit) -> float:
         )
         return round(float(row["rmse"]), 4)
 
-    return _derived_scalar(cat, key, compute)
+    return derive.value(cat, key, compute)
 
 
 def _mllib_emb_rdd(cat: Catalog):
@@ -159,8 +148,6 @@ def _mllib_emb_rdd(cat: Catalog):
     Python vector conversion; one materialized RDD serves the family
     (stays cached for the session: |embeddings| is bounded)."""
     from pyspark.mllib.linalg import Vectors as OldVectors
-
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
 
     def build():
         rdd = (
@@ -172,7 +159,7 @@ def _mllib_emb_rdd(cat: Catalog):
         rdd.count()
         return rdd
 
-    return _derived_obj(cat, "mllib_emb_rdd", build)
+    return derive.value(cat, "mllib_emb_rdd", build)
 
 
 def _emb_rowmatrix(cat: Catalog):
@@ -189,8 +176,6 @@ def _emb_rowmatrix(cat: Catalog):
     accepts nothing but an RDD."""
     from pyspark.mllib.linalg.distributed import RowMatrix
 
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
     def build():
         from pyspark.ml.functions import array_to_vector
         from pyspark.mllib.util import MLUtils
@@ -204,7 +189,7 @@ def _emb_rowmatrix(cat: Catalog):
             "v",
         )
 
-    return RowMatrix(_derived(cat, "mllib_emb_vecdf", build))
+    return RowMatrix(derive.frame(cat, "mllib_emb_vecdf", build))
 
 
 def _lineitem_cov(cat: Catalog, cols: tuple[str, ...]):
@@ -229,8 +214,6 @@ def _lineitem_cov(cat: Catalog, cols: tuple[str, ...]):
     bit-for-bit the one the RDD arm produced (oracle-verified)."""
     from pyspark.mllib.linalg.distributed import RowMatrix
 
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
-
     def build():
         from pyspark.ml.functions import array_to_vector
         from pyspark.mllib.util import MLUtils
@@ -243,7 +226,7 @@ def _lineitem_cov(cat: Catalog, cols: tuple[str, ...]):
         )
         return RowMatrix(vecdf).computeCovariance().toArray()
 
-    return _derived_obj(cat, f"lineitem_cov_{'_'.join(cols)}", build)
+    return derive.value(cat, f"lineitem_cov_{'_'.join(cols)}", build)
 
 
 def _pearson_from_cov(cov) -> list[list[float]]:
@@ -281,9 +264,6 @@ def _kmeans_est_cost(cat: Catalog) -> float:
     ml_est_kmeans and the ml_est_kmeans_wssse anchor consume the SAME
     fitted model's WSSSE — the reference's load-once-run-many lifecycle
     (``KMeansRunner.scala:132``) instead of two identical 10-iter fits."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
 
     def fit() -> float:
         model = KMeans(
@@ -291,7 +271,7 @@ def _kmeans_est_cost(cat: Catalog) -> float:
         ).fit(_features(cat))
         return float(model.summary.trainingCost)
 
-    return _derived_scalar(cat, "kmeans_est_wssse", fit)
+    return derive.value(cat, "kmeans_est_wssse", fit)
 
 
 def ml_est_kmeans(cat: Catalog) -> DataFrame:
@@ -353,26 +333,23 @@ def ml_est_kmeans_wssse(cat: Catalog) -> DataFrame:
         round_half_up,
         round_half_up_f,
     )
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
     from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import (
         KMEANS_K,
         _dist2,
+        _final_centers,
         _points_shared,
         kmeans_lloyd,
     )
 
     assign = kmeans_lloyd(cat)  # session-shared; memoizes final centers
-    key = (
-        cat.spark.sparkContext.applicationId,
-        cat.sf_dir,
-        f"kmeans_centers_k{KMEANS_K}",
-    )
-    if key not in _OBJ_CACHE:  # relational fallback built the assignment:
+
+    def missing():  # relational fallback built the assignment:
         # impossible below CENTERS_BC_MAX_ROWS (k=8 ≪ 100k), which every
         # fixture satisfies; fail loudly rather than re-deriving centers
         # with different arithmetic.
         raise ValueError("no driver-side final centers for the WSSSE surface")
-    cids, cmat = _OBJ_CACHE[key]
+
+    cids, cmat = _final_centers(cat, KMEANS_K, missing)
     centers = cat.spark.createDataFrame(
         [(int(c), [float(x) for x in row]) for c, row in zip(cids, cmat)],
         "cid long, c array<double>",
@@ -595,7 +572,7 @@ def ml_est_als_rdd(cat: Catalog) -> DataFrame:
         )
         .collect()[0]
     )
-    # These caches are per-invocation (not routed through _derived) — drop
+    # These caches are per-invocation (not routed through derive) — drop
     # them now that the metrics are scalars, or every bench/test invocation
     # leaks another cached copy into executor storage (round-3 ADVICE).
     ratings.unpersist(blocking=False)
@@ -667,9 +644,7 @@ def _doc_tokens(cat: Catalog) -> DataFrame:
     input of the LDA and IDF estimator workloads, whose CountVectorizer
     fits each make two passes over it; one scan + tokenize serves both
     (the RDD LDA arm samples its input, so it stays separate)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(
+    return derive.frame(
         cat,
         "doc_tokens_distinct",
         lambda: cat.documents.select(
@@ -689,8 +664,6 @@ def _lda_metrics(cat: Catalog) -> tuple[int, float, float, float]:
     skew, so the floor stays valid as the corpus grows."""
     import numpy as np
     from pyspark.ml.stat import Summarizer
-
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
 
     def build() -> tuple[int, float, float, float]:
         docs = _doc_tokens(cat)
@@ -740,7 +713,7 @@ def _lda_metrics(cat: Catalog) -> tuple[int, float, float, float]:
         finally:
             tf.unpersist(blocking=False)
 
-    return _derived_obj(cat, "lda_metrics", build)
+    return derive.value(cat, "lda_metrics", build)
 
 
 def ml_est_lda(cat: Catalog) -> DataFrame:
@@ -803,7 +776,6 @@ def _centroid_baselines(cat: Catalog, binary: bool) -> tuple[float, float]:
     from spark_ml_algo_lib_master_tongji_spark.functions.vectors import (
         as_double_array,
     )
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
     from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import _dist2
     from pyspark.sql import Window
 
@@ -853,7 +825,7 @@ def _centroid_baselines(cat: Catalog, binary: bool) -> tuple[float, float]:
         )
 
     key = "centroid_baselines_bin" if binary else "centroid_baselines"
-    return _derived_obj(cat, key, build)
+    return derive.value(cat, key, build)
 
 
 def ml_est_logreg_acc(cat: Catalog) -> DataFrame:
@@ -970,10 +942,8 @@ def ml_est_rf_classifier(cat: Catalog) -> DataFrame:
 def gbt_bin_model(cat: Catalog):
     """Session-shared binary GBT fit — ``ml_est_gbt_classifier`` and the
     ``ml_est_xgboost`` GBT fallback train the byte-identical seeded
-    estimator on the same features (``_derived_obj``)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
-
-    return _derived_obj(
+    estimator on the same features (``derive.value``)."""
+    return derive.value(
         cat,
         "gbt_bin_model",
         lambda: GBTClassifier(
@@ -1179,11 +1149,10 @@ def ratings_table(cat: Catalog) -> DataFrame:
     """(user, item, rating): customer×part mean ordered quantity — the
     ratings matrix shape of ``ALSRunner.scala:152-163``.
 
-    Cached per (session, sf_dir) via the shared ``_derived`` store: four
+    Cached per (session, sf_dir) via the shared ``derive.frame`` memo: four
     ALS workloads (explicit / implicit / recommend / RDD arm) all start
     from this lineitem⋈orders aggregate (~7s at sf0.1) — the reference's
     load-once-run-many lifecycle (``ALSRunner.scala:125``)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
 
     def build() -> DataFrame:
         return (
@@ -1198,14 +1167,13 @@ def ratings_table(cat: Catalog) -> DataFrame:
             .agg(F.avg("l_quantity").alias("rating"))
         )
 
-    return _derived(cat, "ratings_table", build)
+    return derive.frame(cat, "ratings_table", build)
 
 
 def _als_explicit_model(cat: Catalog, r: DataFrame):
     """Session-shared explicit-ALS fit — the mse workload and the
     recommend surface train the byte-identical seeded estimator on the
-    same ratings; one fit serves both (``_derived_obj``)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
+    same ratings; one fit serves both (``derive.value``)."""
 
     def build():
         return ALS(
@@ -1218,7 +1186,7 @@ def _als_explicit_model(cat: Catalog, r: DataFrame):
             ratingCol="rating",
         ).fit(r)
 
-    return _derived_obj(cat, "als_explicit_model", build)
+    return derive.value(cat, "als_explicit_model", build)
 
 
 def _als_run(cat: Catalog, implicit: bool) -> DataFrame:
@@ -1301,7 +1269,7 @@ def ml_est_clf_acc_anchors(cat: Catalog) -> DataFrame:
     single-partition model stages). They are submitted from a thread pool so
     each job's tail is back-filled by the next (guide §2.6); values are
     unchanged — every fit is seeded and its jobs are identical under
-    co-scheduling (tools/fit_parallel_ab.py asserts scalar equality). The
+    co-scheduling (scalar equality measured in OPTIMIZATION_r14.md). The
     shared feature relation is materialized BEFORE the pool so concurrent
     first-touch builds never race on the big input.
 
@@ -1531,9 +1499,6 @@ def _gbt_pipeline_acc(cat: Catalog) -> float:
     """Session-shared accuracy of the full 4-stage GBDT pipeline fit —
     ``ml_est_gbt_pipeline`` and the clf-anchor row consume the same
     fit's scalar."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
 
     def compute() -> float:
         from pyspark.ml.feature import (
@@ -1596,7 +1561,7 @@ def _gbt_pipeline_acc(cat: Catalog) -> float:
             prepared.unpersist(blocking=False)
         return round(float(row["acc"]), 4)
 
-    return _derived_scalar(cat, "gbt_pipeline_acc", compute)
+    return derive.value(cat, "gbt_pipeline_acc", compute)
 
 
 def ml_est_gbt_pipeline(cat: Catalog) -> DataFrame:

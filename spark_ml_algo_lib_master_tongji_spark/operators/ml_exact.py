@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.rounding import round_half_up
 from spark_ml_algo_lib_master_tongji_spark.functions.text import tokens
 from spark_ml_algo_lib_master_tongji_spark.functions.vectors import as_double_array, dot
@@ -106,10 +107,8 @@ def _points_shared(cat: Catalog) -> DataFrame:
     ALL k values (the default-k registry queries and each corpus-scaled
     semantic-dedup k formerly pinned an independent persist per build with
     no release path — round-6 ADVICE); lifetime is managed by the
-    ``_derived`` session cache like every other shared derivation."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(cat, "kmeans_points", lambda: _points(cat))
+    derive memo like every other shared derivation."""
+    return derive.frame(cat, "kmeans_points", lambda: _points(cat))
 
 
 def _dist2(v, c):
@@ -346,12 +345,18 @@ def kmeans_lloyd(cat: Catalog, k: int = KMEANS_K) -> DataFrame:
     requests its corpus-scaled k (``dedup.semdedup_k`` — k ∝ n), which
     collapses to the same shared derivation whenever it equals KMEANS_K
     (it does on the 500-point oracle fixture)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
     name = (
         "kmeans_lloyd_assign" if k == KMEANS_K else f"kmeans_lloyd_assign_k{k}"
     )
-    return _derived(cat, name, lambda: _kmeans_lloyd_build(cat, k))
+    return derive.frame(cat, name, lambda: _kmeans_lloyd_build(cat, k))
+
+
+def _final_centers(cat: Catalog, k: int, build) -> tuple[list, list]:
+    """Session-shared final (center ids, center matrix) of the Lloyd run
+    for ``k``. The kernel arms store them from inside the Lloyd build;
+    readers pass a ``build`` that raises, because the relational-fallback
+    arm keeps no driver-side centers."""
+    return derive.value(cat, f"kmeans_centers_k{k}", build)
 
 
 def _kmeans_lloyd_build(
@@ -400,15 +405,11 @@ def _kmeans_lloyd_build(
         spent.append(bc)
     # Final centers are memoized for the bench agreement scalar
     # (``lloyd_ivf_agreement``) — k×dim doubles, session lifecycle.
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
-
-    _OBJ_CACHE[
-        (cat.spark.sparkContext.applicationId, cat.sf_dir, f"kmeans_centers_k{k}")
-    ] = (cids, cmat)
+    _final_centers(cat, k, lambda: (cids, cmat))
     out, _final_bc = assign_arm(points, cids, cmat)
     # intermediate center broadcasts are spent (their updates collected);
     # the final one must stay alive — `out` references it lazily and
-    # _derived's cache can be rebuilt after eviction.
+    # the derive memo can be rebuilt after eviction.
     for b in spent:
         b.destroy(blocking=False)
     return out.select("vec_id", "cid")
@@ -429,12 +430,11 @@ def lloyd_ivf_agreement(
     if n_probes is None:
         n_probes = LLOYD_IVF_NPROBES
     kmeans_lloyd(cat, k)  # shared derivation — also memoizes final centers
-    key = (cat.spark.sparkContext.applicationId, cat.sf_dir, f"kmeans_centers_k{k}")
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
 
-    if key not in _OBJ_CACHE:  # relational-fallback arm: no driver centers
+    def missing():  # relational-fallback arm: no driver centers
         raise ValueError(f"no driver-side centers for k={k}")
-    cids, cmat = _OBJ_CACHE[key]
+
+    cids, cmat = _final_centers(cat, k, missing)
     points = _points_shared(cat)
     # Both arms run fresh over the SAME final centers, so the scalar is a
     # pure arm comparison whichever arm the shared build itself took.

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.text import tokens
 from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog, spread
 
@@ -19,9 +20,7 @@ def _spca_coo(cat: Catalog) -> DataFrame:
     (doc_id, col, value) over the SPCA_VOCAB most frequent tokens
     (ties → lexicographic) — input of both the sparse-PCA fit and the
     ``ml_est_spca_energy`` trace anchor."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
-
-    return _derived(cat, "spca_coo", lambda: _spca_coo_build(cat))
+    return derive.frame(cat, "spca_coo", lambda: _spca_coo_build(cat))
 
 
 def _spca_coo_build(cat: Catalog) -> DataFrame:
@@ -53,7 +52,6 @@ def _spca_coo_build(cat: Catalog) -> DataFrame:
 def _spca_ratios(cat: Catalog) -> list[float]:
     """Session-shared sparse-PCA fit → the SPCA_K explained-variance
     ratios (consumed by the spectrum row and the energy anchor)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
 
     def build() -> list[float]:
         from pyspark.ml.feature import PCA
@@ -86,7 +84,7 @@ def _spca_ratios(cat: Catalog) -> list[float]:
         m = PCA(k=SPCA_K, inputCol="features", outputCol="pc").fit(vecs)
         return [round(float(v), 6) for v in m.explainedVariance]
 
-    return _derived_obj(cat, "spca_ratios", build)
+    return derive.value(cat, "spca_ratios", build)
 
 
 def ml_est_pca_sparse(cat: Catalog) -> DataFrame:

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.rounding import round_half_up
 
 from spark_ml_algo_lib_master_tongji_spark.functions import text as TXT
@@ -72,12 +73,11 @@ def doc_features(cat: Catalog) -> DataFrame:
     projection that four queries (lang_id, lang_rollup, stratified
     sample, training mix) each recomputed from the raw text (5 marker
     filters + stopword/distinct filters per call). One spread scan
-    computes it; the ``_derived`` session cache serves every consumer —
+    computes it; the ``derive.frame`` memo serves every consumer —
     the same materialize-the-features-intermediate tradeoff as
     ``doc_shingles`` (a corpus pipeline persists this table anyway).
     Values are the identical shared expression Columns, so oracle hashes
     are unchanged."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived
 
     def build():
         c = F.col("text")
@@ -90,7 +90,7 @@ def doc_features(cat: Catalog) -> DataFrame:
             TXT.token_count(c).alias("n_tokens"),
         )
 
-    return _derived(cat, "doc_features", build)
+    return derive.frame(cat, "doc_features", build)
 
 
 def text_quality_score(cat: Catalog) -> DataFrame:

@@ -23,8 +23,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_session(
     app_name: str = "spark-ml-algo-lib-tongji",
@@ -34,10 +32,11 @@ def get_session(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for batch analytics.
 
-    Local testing runs ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
-    same configs apply and the master comes from spark-submit.
+    Local testing runs ``local[$SPARK_GRAFT_CPUS]`` with as many shuffle
+    partitions, both read here at call time; on a real cluster the same
+    configs apply and the master comes from spark-submit.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -48,7 +47,7 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Arrow for every pandas interchange (pandas_udf, applyInPandas).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

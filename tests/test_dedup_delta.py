@@ -482,14 +482,14 @@ def test_env_index_dir_reuses_complete_store(spark, tmp_path, monkeypatch):
     _SUCCESS) is rebuilt in place."""
     import os
 
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
+    from spark_ml_algo_lib_master_tongji_spark import derive
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
 
     def clear():
         app = spark.sparkContext.applicationId
-        for k in [k for k in _OBJ_CACHE if k[0] == app and "dedup_index" in str(k)]:
-            del _OBJ_CACHE[k]
+        for k in [k for k in derive._MEMO if k[0] == app and "dedup_index" in str(k)]:
+            del derive._MEMO[k]
 
     clear()
     cat = Catalog(spark, SF_ORACLE)

@@ -275,23 +275,6 @@ def test_csr_kernels_subquadratic_on_sparse_many_vertex_graph(spark):
     assert elapsed < 120, f"CSR kernel no longer subquadratic: {elapsed:.0f}s"
 
 
-def test_derived_caches_evict_dead_sessions():
-    """Cache entries keyed to a stopped session's applicationId are dropped
-    on the first miss under a new one (round-4 ADVICE: stale CSR broadcasts
-    pinned O(|E|) numpy arrays for the process lifetime)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators import graph
-
-    graph._SCALAR_CACHE[("dead-app", "sf", "x")] = 1
-    graph._DERIV_CACHE[("dead-app", "sf", "y")] = object()
-    graph._OBJ_CACHE[("dead-app", "sf", "z")] = object()
-    graph._evict_dead_sessions("live-app")
-    assert not any(
-        k[0] == "dead-app"
-        for c in (graph._SCALAR_CACHE, graph._DERIV_CACHE, graph._OBJ_CACHE)
-        for k in c
-    )
-
-
 def test_min_plus_closure_arms_agree(cat):
     """The size-gated local Floyd-Warshall arm and the distributed min-plus
     doubling loop are two physical strategies for the same exact closure —

@@ -27,12 +27,11 @@ def _clear_session_caches(spark) -> None:
     """Drop every session-shared derivation so the second sweep re-executes
     its plans under the new shuffle-partition setting instead of reusing
     frames materialized under the old one."""
-    from spark_ml_algo_lib_master_tongji_spark.operators import graph as G
+    from spark_ml_algo_lib_master_tongji_spark import derive
 
     app = spark.sparkContext.applicationId
-    for cache in (G._DERIV_CACHE, G._SCALAR_CACHE, G._OBJ_CACHE):
-        for k in [k for k in cache if k[0] == app]:
-            del cache[k]
+    for k in [k for k in derive._MEMO if k[0] == app]:
+        del derive._MEMO[k]
     spark.catalog.clearCache()
 
 

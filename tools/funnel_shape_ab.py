@@ -1,6 +1,5 @@
 """A/B the three funnel formulations behind round-12's rebuild of
-``q_funnel_conversion`` — committed so the PLANS numbers stay reproducible
-(the ``bucketed_store_ab`` convention).
+``q_funnel_conversion`` — committed so the PLANS numbers stay reproducible.
 
 Arms, oldest first:
 

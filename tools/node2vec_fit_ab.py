@@ -11,7 +11,7 @@ each timed after the previous stage's result is persisted+materialized,
 so no stage re-times its upstream:
 
 - **walks**: the exact uniform walk corpus (``_uniform_walks`` called
-  directly — bypasses the ``_derived`` session cache so the real cost is
+  directly — bypasses the ``derive.frame`` memo so the real cost is
   visible), persisted + counted.
 - **sentences**: the groupBy(walk_id) collect_list reshape the fit
   consumes, from the persisted walks.
@@ -22,7 +22,7 @@ so no stage re-times its upstream:
 
 If walks were a meaningful share, the fix would be persisting the walk
 corpus across the three node2vec rows — but that already exists
-(``_derived``: the registry's embeddings row consumes the same
+(``derive.frame``: the registry's embeddings row consumes the same
 session-shared walk table as the two walk rows; this tool bypasses it
 only to measure).
 
