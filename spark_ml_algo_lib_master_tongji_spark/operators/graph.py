@@ -30,7 +30,17 @@ same key every round, so executors re-shuffle only the (small) vertex state,
 never the raw fact table. Edges are derived once, projected to (src,dst,w),
 persisted, and reused across supersteps; lineage is truncated every few
 rounds (``plans/iterative``). Skewed high-degree vertices are handled by
-AQE skew-join splitting; nothing here collects rows to the driver.
+AQE skew-join splitting.
+
+**Dispatch rule.** While the co-purchase graph has at most
+``ADJ_BC_MAX_EDGES`` canonical edges, the registry rows that have a CSR
+kernel (PageRank, personalized PageRank, TrustRank, connected components,
+triangles, subgraph matching) run numpy kernels over the session-shared
+CSR adjacency (``copurchase_csr``) — on the driver or in broadcast-reading
+tasks — with the same semantics as the distributed arm. Above the ceiling
+they run the distributed DataFrame supersteps, which is the scale arm. The
+nation-graph closure has its own, smaller ceiling
+(``TINY_CLOSURE_MAX_EDGES``).
 """
 
 from __future__ import annotations
@@ -42,6 +52,7 @@ from pyspark.storagelevel import StorageLevel
 from spark_ml_algo_lib_master_tongji_spark import derive
 from spark_ml_algo_lib_master_tongji_spark.functions.rounding import round_half_up
 from spark_ml_algo_lib_master_tongji_spark.plans.iterative import (
+    NotConvergedError,
     iterate,
     monotone_sum_probe,
     stat_fixpoint_probe,
@@ -1112,8 +1123,8 @@ def csr_broadcast(pairs: DataFrame):
     """Symmetrized CSR adjacency of an undirected (src<dst) pair list,
     shipped once as a Spark broadcast → (broadcast of (indptr, nbrs),
     n_vertices). Shared by the kernel-strategy operators (subgraph
-    matching, sampled betweenness); gate callers on ``ADJ_BC_MAX_EDGES`` —
-    the broadcast is O(|E|).
+    matching, triangles, sampled betweenness, the PageRank / CC kernel
+    rows); gate callers on ``ADJ_BC_MAX_EDGES`` — the broadcast is O(|E|).
 
     Each vertex's neighbor slice is SORTED ascending: the counting kernels
     binary-search it (``searchsorted``), which is what keeps their
@@ -1124,9 +1135,10 @@ def csr_broadcast(pairs: DataFrame):
     import numpy as np
 
     edges = pairs.select("src", "dst").toPandas()
-    srcs = edges["src"].to_numpy()
-    dsts = edges["dst"].to_numpy()
-    n = int(max(srcs.max(), dsts.max())) + 1
+    srcs = edges["src"].to_numpy(np.int64)
+    dsts = edges["dst"].to_numpy(np.int64)
+    # an empty pair list is the empty graph: n = 0, indptr = [0], no nbrs
+    n = int(max(srcs.max(), dsts.max())) + 1 if len(srcs) else 0
     deg = np.bincount(srcs, minlength=n) + np.bincount(dsts, minlength=n)
     all_src = np.concatenate([srcs, dsts])
     all_nbr = np.concatenate([dsts, srcs])
@@ -1152,12 +1164,123 @@ def _sorted_membership_count(sorted_arr, values):
 
 def copurchase_csr(cat: Catalog):
     """Session-shared CSR broadcast of the co-purchase adjacency →
-    ((broadcast, n_vertices)). Sampled betweenness and the subgraph-match
-    kernel ship the identical adjacency; one driver materialization +
-    broadcast serves both (callers must NOT unpersist it)."""
+    ((broadcast, n_vertices)). One driver materialization + broadcast
+    serves every kernel consumer (callers must NOT unpersist it):
+
+    - in tasks: sampled betweenness, the subgraph-match kernel and the
+      per-vertex triangle kernel;
+    - on the driver (``bc.value``): the PageRank, personalized PageRank,
+      TrustRank and connected-components registry rows
+      (``_copurchase_kernel_rows``)."""
     return derive.value(
         cat, "copurchase_csr", lambda: csr_broadcast(copurchase_pairs(cat))
     )
+
+
+def _copurchase_fits_csr(cat: Catalog) -> bool:
+    """Dispatch gate of the co-purchase kernel rows: the CSR adjacency is
+    O(|E|), so the kernels run only up to ``ADJ_BC_MAX_EDGES``."""
+    return copurchase_pairs(cat).count() <= ADJ_BC_MAX_EDGES
+
+
+# ---- CSR kernel arm of the PageRank / CC rows ------------------------------
+#
+# Driver-side numpy loops over the session CSR with the semantics of the
+# distributed arm (``pagerank`` … ``connected_components``), which stays
+# the scale arm above ``ADJ_BC_MAX_EDGES``. Labels are exact; PageRank
+# sums accumulate in another order, so they can differ in the last bits
+# before the shared 6-decimal rounding (tests pin equal rows). Driver memory at the ceiling
+# (25M canonical edges, 2|E| = 50M CSR entries): the CSR itself is ~200 MB
+# of int32 neighbours plus an (n+1)-entry int64 indptr; a PageRank round
+# adds one 2|E| float64 array (~400 MB), a CC round one 2|E| int32 gather
+# (~200 MB). No 2|E| int64 row-index array is ever built.
+
+
+def _pr_power(indptr, nbrs, reset, n_iter: int = PR_ITERS):
+    """Fixed-iteration power iteration over a symmetric CSR → per-id pr.
+
+    ``pr0 = reset``, then ``n_iter`` rounds of
+    ``reset + DAMP · Σ_in pr · (1/deg)``, with deg the CSR slice length —
+    the ``_pagerank_loop`` recurrence with ``pr_share_edges``' unweighted
+    share. Ids with degree 0 must carry zero reset; they stay at 0."""
+    import numpy as np
+
+    deg = np.diff(indptr)
+    share = np.zeros(len(deg))
+    np.divide(1.0, deg, out=share, where=deg > 0)
+    pr = reset
+    for _ in range(n_iter):
+        contrib = np.bincount(
+            nbrs, weights=np.repeat(pr * share, deg), minlength=len(deg)
+        )
+        pr = reset + DAMP * contrib
+    return pr
+
+
+def _min_label_fixpoint(indptr, nbrs, n_iter: int = CC_ITERS):
+    """Min-label propagation over a symmetric CSR to its fixed point →
+    per-id labels (``label0 = id``; each round takes the min of the own
+    label and the neighbours' labels).
+
+    Mirrors ``connected_components``' ``iterate(verify_fixpoint=…)``
+    contract exactly: return at the first round that changes nothing, and
+    raise ``NotConvergedError`` when round ``n_iter + 1`` still changes a
+    label. Zero rounds is the unchecked identity, as in ``iterate``."""
+    import numpy as np
+
+    deg = np.diff(indptr)
+    has = deg > 0
+    starts = indptr[:-1][has]
+    labels = np.arange(len(deg), dtype=nbrs.dtype)
+    if n_iter == 0:
+        return labels
+    for _ in range(n_iter + 1):
+        new = labels.copy()
+        # reduceat over the nonempty slices only: each segment then runs
+        # exactly to its slice end (empty slices in between hold nothing)
+        new[has] = np.minimum(
+            labels[has], np.minimum.reduceat(labels[nbrs], starts)
+        )
+        if np.array_equal(new, labels):
+            return labels
+        labels = new
+    raise NotConvergedError(
+        f"state still changing after {n_iter} rounds; raise the "
+        "round budget for this graph"
+    )
+
+
+def _copurchase_kernel_rows(
+    cat: Catalog, col: str, dtype: str, kernel
+) -> DataFrame:
+    """Run ``kernel(indptr, nbrs, v) → per-id values`` on the driver over
+    the session CSR and return ``(v, col)`` rows for the graph's vertices:
+    the ids with nonzero degree, ascending — the vertex set of
+    ``copurchase_verts``."""
+    import numpy as np
+    import pandas as pd
+
+    bc, _n = copurchase_csr(cat)
+    indptr, nbrs = bc.value
+    v = np.flatnonzero(np.diff(indptr))
+    pdf = pd.DataFrame({"v": v.astype(np.int64), col: kernel(indptr, nbrs, v)[v]})
+    return cat.spark.createDataFrame(pdf, f"v long, {col} {dtype}")
+
+
+def _copurchase_pr_rows(cat: Catalog, seeds) -> DataFrame:
+    """Kernel arm of the unweighted PageRank rows → (v, pr). ``seeds(v)``
+    maps the ascending vertex ids to ``(reset ids, reset mass)``."""
+    import numpy as np
+
+    def kernel(indptr, nbrs, v):
+        reset = np.zeros(len(indptr) - 1)
+        if len(v):
+            ids, mass = seeds(v)
+            reset[ids] = mass
+        return _pr_power(indptr, nbrs, reset, PR_ITERS)
+
+    pr = _copurchase_kernel_rows(cat, "pr", "double", kernel)
+    return pr.select("v", round_half_up(F.col("pr"), 6).alias("pr"))
 
 
 def _match_counts_wedge_join(pairs: DataFrame) -> tuple[int, int]:
@@ -1310,6 +1433,8 @@ def graph_degrees(cat: Catalog) -> DataFrame:
 
 
 def graph_pagerank(cat: Catalog) -> DataFrame:
+    if _copurchase_fits_csr(cat):
+        return _copurchase_pr_rows(cat, lambda v: (v, RESET / len(v)))
     return pagerank(
         sym_copurchase(cat),
         verts=copurchase_verts(cat),
@@ -1319,6 +1444,8 @@ def graph_pagerank(cat: Catalog) -> DataFrame:
 
 
 def graph_pagerank_personalized(cat: Catalog) -> DataFrame:
+    if _copurchase_fits_csr(cat):
+        return _copurchase_pr_rows(cat, lambda v: (v[:1], RESET))
     return personalized_pagerank(
         sym_copurchase(cat),
         verts=copurchase_verts(cat),
@@ -1346,6 +1473,10 @@ def graph_pagerank_weighted(cat: Catalog) -> DataFrame:
 
 
 def graph_trustrank(cat: Catalog) -> DataFrame:
+    if _copurchase_fits_csr(cat):
+        return _copurchase_pr_rows(
+            cat, lambda v: (v[:TRUST_SEEDS], RESET / TRUST_SEEDS)
+        )
     return trustrank(
         sym_copurchase(cat),
         verts=copurchase_verts(cat),
@@ -1355,6 +1486,10 @@ def graph_trustrank(cat: Catalog) -> DataFrame:
 
 
 def graph_connected_components(cat: Catalog) -> DataFrame:
+    if _copurchase_fits_csr(cat):
+        return _copurchase_kernel_rows(
+            cat, "label", "long", lambda ip, nb, _v: _min_label_fixpoint(ip, nb)
+        )
     return connected_components(sym_copurchase(cat))
 
 
@@ -1392,9 +1527,8 @@ def copurchase_triangles(cat: Catalog) -> DataFrame:
     kernel arm reuses the session CSR broadcast when the gate admits it."""
 
     def build() -> DataFrame:
-        pairs = copurchase_pairs(cat)
-        csr = copurchase_csr(cat) if pairs.count() <= ADJ_BC_MAX_EDGES else None
-        return triangles(pairs, csr=csr)
+        csr = copurchase_csr(cat) if _copurchase_fits_csr(cat) else None
+        return triangles(copurchase_pairs(cat), csr=csr)
 
     return derive.frame(cat, "copurchase_triangles", build)
 
@@ -1458,11 +1592,10 @@ def graph_degrees_nation(cat: Catalog) -> DataFrame:
 
 
 def graph_subgraph_matching(cat: Catalog) -> DataFrame:
-    pairs = copurchase_pairs(cat)
     # Share the CSR broadcast with sampled betweenness, but only when the
     # kernel strategy would fire anyway (the gate re-checks inside).
-    csr = copurchase_csr(cat) if pairs.count() <= ADJ_BC_MAX_EDGES else None
-    return subgraph_match_counts(pairs, csr=csr)
+    csr = copurchase_csr(cat) if _copurchase_fits_csr(cat) else None
+    return subgraph_match_counts(copurchase_pairs(cat), csr=csr)
 
 
 #: registry-exported query names (ordering lives in registry._ORDER)

@@ -118,13 +118,24 @@ def stat_fixpoint_probe(*exprs: str):
     (labels only decrease); count(1) for grow-only / shrink-only row sets
     (closures, peels); reached-count + Σreached-dist for relaxation loops
     (the reached set only grows, reached distances only decrease, and the
-    guarded sum avoids the INF-sentinel int64 overflow a raw Σdist has)."""
+    guarded sum avoids the INF-sentinel int64 overflow a raw Σdist has).
+
+    ``iterate`` passes each cut's state as ``after`` and then as the next
+    cut's ``before``, so the probe keeps the last ``(after, stats)`` pair
+    and reuses it when ``before`` is that very frame: one agg job per
+    probed cut instead of two."""
     from pyspark.sql import functions as F
 
-    def probe(before: DataFrame, after: DataFrame) -> bool:
+    last: list = [None, None]  # the previous call's (after, stats)
+
+    def stats(df: DataFrame) -> tuple:
         cols = [F.expr(e).alias(f"s{i}") for i, e in enumerate(exprs)]
-        b = tuple(before.agg(*cols).collect()[0])
-        a = tuple(after.agg(*cols).collect()[0])
+        return tuple(df.agg(*cols).collect()[0])
+
+    def probe(before: DataFrame, after: DataFrame) -> bool:
+        b = last[1] if last[0] is before else stats(before)
+        a = stats(after)
+        last[:] = [after, a]
         return b == a
 
     return probe

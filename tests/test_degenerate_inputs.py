@@ -47,6 +47,23 @@ def test_bfs_isolated_source_component(spark):
     assert out == {1: 0, 2: 1}
 
 
+def test_triangles_on_empty_pairs(spark):
+    """The CSR arm builds its adjacency from the pair list: an empty list
+    is the empty graph (n = 0), not a ``max()`` of a zero-size array."""
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import triangles
+
+    pairs = spark.createDataFrame([], "src long, dst long, cnt long")
+    assert triangles(pairs).count() == 0
+
+
+def test_csr_kernels_on_empty_csr():
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+
+    indptr, nbrs = np.array([0], np.int64), np.array([], np.int32)
+    assert len(graph._pr_power(indptr, nbrs, np.zeros(0))) == 0
+    assert len(graph._min_label_fixpoint(indptr, nbrs)) == 0
+
+
 def test_degrees_empty(spark, empty_edges):
     from spark_ml_algo_lib_master_tongji_spark.operators.graph import degrees
 

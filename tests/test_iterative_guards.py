@@ -179,3 +179,31 @@ def test_monotone_sum_probe_matches_unchanged_on_label_loops(spark):
     # truncated-propagation guard still fires through the scalar probe
     with pytest.raises(NotConvergedError):
         graph.connected_components(e, n_iter=2).collect()
+
+
+def test_stat_probe_reuses_previous_after_stats(spark, monkeypatch):
+    """``iterate`` hands each cut's state to the probe as ``after`` and then
+    as the next ``before``: a chain probe(a, b), probe(b, c) runs three
+    stat aggs, not four, and still judges each pair correctly."""
+    from spark_ml_algo_lib_master_tongji_spark.plans.iterative import (
+        stat_fixpoint_probe,
+    )
+
+    a = spark.createDataFrame([(1, 5), (2, 7)], "v long, label long")
+    b = spark.createDataFrame([(1, 5), (2, 6)], "v long, label long")
+    c = spark.createDataFrame([(1, 5), (2, 6)], "v long, label long")
+    calls = []
+    agg = type(a).agg
+
+    def spy(self, *cols):
+        calls.append(self)
+        return agg(self, *cols)
+
+    monkeypatch.setattr(type(a), "agg", spy)
+    probe = stat_fixpoint_probe("sum(label)")
+    assert not probe(a, b)
+    assert probe(b, c)
+    assert calls == [a, b, c]
+    # a fresh ``before`` is never served from the cache
+    assert not probe(a, c)
+    assert calls[3:] == [a, c]
