@@ -16,6 +16,12 @@ Exact all-pairs work is irreducibly Θ(n²); for corpora where candidates
 can be pruned (clusterable / near-dup regimes) put a candidate generator
 (LSH buckets, grid cells, prefix filters — see dedup.py/similarity.py) in
 front and keep this as the verification kernel.
+
+The driver-side arms of the blocked near-dup rows (SimHash prefix blocks,
+n-gram prefix postings, LSH buckets) share their helpers here:
+``local_rows`` (the size gate that also fetches the input), ``block_pairs``
+(the equal-key pair enumerator with its own pair ceiling) and
+``local_frame`` (the result as one partition).
 """
 
 from __future__ import annotations
@@ -59,11 +65,92 @@ def seq_self_dot(a: np.ndarray) -> np.ndarray:
     return acc
 
 
+def seq_pair_dot(x: np.ndarray, i: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """⟨x[i], x[j]⟩ per index pair with the same sequential fold as
+    ``seq_dot``, one column at a time (never gathers (pairs, dim) rows)."""
+    acc = np.zeros(len(i))
+    for col in x.T:
+        acc = acc + col[i] * col[j]
+    return acc
+
+
 def round_half_up_np(x: np.ndarray, digits: int) -> np.ndarray:
     """numpy twin of ``functions.rounding.round_half_up`` — same IEEE
     multiply/add/floor/divide sequence."""
     scale = float(10**digits)
     return np.floor(x * scale + 0.5) / scale
+
+
+# ---- driver-side arm of the blocked near-dup rows ---------------------------
+#
+# Below a row ceiling (set per row) and ``LOCAL_MAX_PAIRS``, the SimHash,
+# n-gram-Jaccard and LSH-bucket pair rows run on the driver: one bounded
+# fetch, numpy candidate generation and verification, and one
+# ``createDataFrame`` — instead of a dozen small jobs and a shuffled
+# self-join. Above either ceiling the distributed arm runs unchanged.
+
+#: ceiling on Σ C(block, 2) candidate pairs a driver-side arm enumerates.
+#: At the ceiling the enumerator holds ~6 int64 arrays of this length
+#: (~100 MB) and the verification keeps a few float64 ones (~50 MB).
+LOCAL_MAX_PAIRS = 2_000_000
+
+
+def local_rows(
+    df: DataFrame, id_col: str, col: str, max_rows: int
+) -> tuple[np.ndarray, list] | None:
+    """Size gate that also fetches: ``(ids, values)`` of ``df``'s
+    ``id_col`` / ``col`` on the driver, or None when the table has more than
+    ``max_rows`` rows or a null or repeated id (the distributed arm keeps
+    SQL's multiset join semantics for those). One bounded action at any
+    scale: ``limit(…).collect()`` scans partitions incrementally until it
+    holds ``max_rows + 1`` rows, with no shuffle — ``toPandas()`` of the
+    same limit shuffles up to ``max_rows + 1`` rows from EVERY partition."""
+    rows = df.select(id_col, col).limit(max_rows + 1).collect()
+    ids = [r[0] for r in rows]
+    if len(rows) > max_rows or None in ids or len(set(ids)) < len(ids):
+        return None
+    return np.array(ids, np.int64), [r[1] for r in rows]
+
+
+def local_frame(spark, columns: dict, schema: T.StructType) -> DataFrame:
+    """A driver-side arm's result rows as ONE partition: they are already
+    on the driver, and a count over one partition needs no exchange. The
+    schema is a ``StructType``, not DDL: parsing DDL costs a JVM round
+    trip, ~0.5 s on a cold session."""
+    return spark.createDataFrame(pd.DataFrame(columns), schema).coalesce(1)
+
+
+def block_pairs(
+    keys: np.ndarray,
+    ids: np.ndarray,
+    rows: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Every unordered pair of rows that share a block key, once.
+
+    Posting p puts row ``rows[p]`` (default: p) in block ``keys[p]``; a row
+    may sit in several blocks. Returns row-index arrays (i, j) with
+    ``ids[i] < ids[j]`` (``ids`` unique), each pair once however many
+    blocks it shares, or None when Σ C(block, 2) exceeds ``LOCAL_MAX_PAIRS``
+    — checked before any pair is built, so a hot block never goes
+    quadratic on the driver."""
+    if len(keys) == 0:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    if rows is None:
+        rows = np.arange(len(keys))
+    order = np.lexsort((ids[rows], keys))
+    k, r = keys[order], rows[order]
+    starts = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
+    sizes = np.diff(np.r_[starts, len(k)])
+    if int((sizes * (sizes - 1) // 2).sum()) > LOCAL_MAX_PAIRS:
+        return None
+    # posting t pairs with the postings after it in its block (id-sorted)
+    after = np.repeat(starts + sizes, sizes) - np.arange(len(k)) - 1
+    left = np.repeat(np.arange(len(k)), after)
+    run_start = np.repeat(np.cumsum(after) - after, after)
+    right = left + 1 + (np.arange(len(left)) - run_start)
+    n = len(ids)
+    code = np.unique(r[left].astype(np.int64) * n + r[right])
+    return code // n, code % n
 
 
 def _n_blocks(n: int, block_rows: int, max_blocks: int | None = None) -> int:

@@ -414,3 +414,178 @@ def test_histogram_on_constant_values(spark, tmp_path):
     assert r["bucket"] == 0 and r["n"] == n
     assert abs(r["bucket_lo"] - 5.0) < 1e-9
     assert abs(r["sum_value"] - 5.0 * n) < 1e-6
+
+
+# ---- driver-side arm of the near-dup pair rows ------------------------------
+#
+# dedup_simhash_pairs, dedup_ngram_jaccard and sim_lsh_bucket_pairs run on
+# the driver below their ceilings (tests/test_dedup_kernels.py). On inputs
+# the kernels cannot reproduce exactly they must hand over to the
+# distributed arm; on the rest they must equal it (or, where the
+# distributed arm fails, the DuckDB oracle).
+
+_PAIR_ROWS = (
+    ("dedup", "dedup_simhash_pairs", "LOCAL_MAX_DOCS"),
+    ("dedup", "dedup_ngram_jaccard", "LOCAL_MAX_DOCS"),
+    ("similarity", "sim_lsh_bucket_pairs", "LOCAL_MAX_VECTORS"),
+)
+
+
+def _ops(mod):
+    import importlib
+
+    return importlib.import_module(
+        f"spark_ml_algo_lib_master_tongji_spark.operators.{mod}"
+    )
+
+
+def _both_arms(monkeypatch, cat, mod, name, ceiling):
+    """(driver-side rows, distributed rows, driver-side schema,
+    distributed schema) of one pair row."""
+    m_ = _ops(mod)
+
+    def forbidden(*_a, **_k):
+        raise AssertionError("wrong arm dispatched")
+
+    with monkeypatch.context() as m:
+        m.setattr(m_, "spread", forbidden)
+        local = getattr(m_, name)(cat)
+        local_rows = sorted(map(tuple, local.collect()))
+    with monkeypatch.context() as m:
+        m.setattr(m_, ceiling, -1)
+        dist = getattr(m_, name)(cat)
+        dist_rows = sorted(map(tuple, dist.collect()))
+    return local_rows, dist_rows, local.schema, dist.schema
+
+
+def _emb_catalog(spark, tmp_path, rows, sub):
+    from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog
+
+    d = tmp_path / sub
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    df.write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
+    return Catalog(spark, str(d))
+
+
+def test_pair_rows_on_empty_tables(spark, monkeypatch, empty_sf):
+    from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog
+
+    cat = Catalog(spark, empty_sf)
+    for mod, name, ceiling in _PAIR_ROWS:
+        local, dist, ls, ds = _both_arms(monkeypatch, cat, mod, name, ceiling)
+        assert local == dist == [], name
+        assert ls == ds, name
+
+
+def test_pair_rows_on_null_and_short_texts(spark, monkeypatch, tmp_path):
+    """A NULL text has no tokens: SimHash 0 (so two NULL texts are a
+    hamming-0 pair, as in the distributed arm) and no shingles. The
+    distributed n-gram arm fails on a NULL text (NGram's UDF dereferences
+    it), so that row is checked against its DuckDB oracle, which reads
+    NULL as no shingles."""
+    import duckdb
+
+    from spark_ml_algo_lib_master_tongji_spark.oracles import DEDUP_ORACLES
+    from tests.compare import assert_match
+
+    text = "a b c d e f g h"
+    cat = _doc_catalog(
+        spark,
+        tmp_path,
+        [(1, None), (2, text), (3, text + " i"), (4, ""), (5, None), (6, "x y")],
+        "nulls",
+    )
+    local, dist, ls, ds = _both_arms(monkeypatch, cat, *_PAIR_ROWS[0])
+    assert local == dist and ls == ds
+    assert (1, 5, 0) in local
+
+    from spark_ml_algo_lib_master_tongji_spark.operators.dedup import (
+        dedup_ngram_jaccard,
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{cat.sf_dir}/documents.parquet/*.parquet')"
+    )
+    out = dedup_ngram_jaccard(cat)
+    assert [tuple(r) for r in out.collect()] == [(2, 3, 0.8571)]
+    assert_match(out, con, DEDUP_ORACLES["dedup_ngram_jaccard"], "nulls")
+    con.close()
+
+
+def test_pair_rows_when_every_text_is_under_three_tokens(
+    spark, monkeypatch, tmp_path
+):
+    cat = _doc_catalog(
+        spark, tmp_path, [(1, "a b"), (2, "a b"), (3, "x"), (4, "")], "short"
+    )
+    local, dist, ls, ds = _both_arms(monkeypatch, cat, *_PAIR_ROWS[0])
+    assert local == dist and ls == ds
+    assert (1, 2, 0) in local
+    local, dist, ls, ds = _both_arms(monkeypatch, cat, *_PAIR_ROWS[1])
+    assert local == dist == [] and ls == ds
+
+
+def test_doc_local_arms_decline_repeated_ids(spark, tmp_path):
+    """A repeated doc_id makes the self-joins multiset joins; the driver-side
+    arms emit each id pair once, so they must hand over."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import dedup
+
+    cat = _doc_catalog(
+        spark, tmp_path, [(1, "a b c d"), (1, "a b c e"), (2, "a b c d")], "dup"
+    )
+    assert dedup._simhash_pairs_local(cat, 6) is None
+    assert dedup._ngram_jaccard_local(cat) is None
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        (3, None, 0),  # NULL vector
+        (3, [1.0, 2.0], 0),  # ragged
+        (3, [1.0, None, 0.5], 0),  # NULL element
+        (3, [1.0, float("nan"), 0.5], 0),  # NaN element
+    ],
+    ids=["null", "ragged", "null-element", "nan-element"],
+)
+def test_lsh_local_arm_declines_null_ragged_or_nonfinite(
+    spark, tmp_path, bad
+):
+    """Vectors the numpy kernel cannot reproduce exactly (the distributed
+    arm reads dim from one row, orders NaN above every number and yields
+    NULL dots for NULL elements) take the distributed arm."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import similarity
+
+    rows = [(1, [1.0, 0.0, 0.5], 0), (2, [2.0, 0.0, 1.0], 0), bad]
+    cat = _emb_catalog(spark, tmp_path, rows, "bad")
+    assert similarity._lsh_pairs_local(cat, 8, 0.35) is None
+    cat = _emb_catalog(spark, tmp_path, rows[:2], "good")
+    assert similarity._lsh_pairs_local(cat, 8, 0.35).collect() == [(1, 2, 1.0)]
+
+
+def test_pair_rows_over_the_pair_ceiling_run_distributed(
+    spark, monkeypatch, tmp_path
+):
+    """Twelve identical rows form one block of 66 pairs (three for the
+    n-gram prefix): with the pair ceiling at 65 every row must take the
+    distributed arm, which still returns all 66 pairs."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import pairs
+
+    monkeypatch.setattr(pairs, "LOCAL_MAX_PAIRS", 65)
+    docs = _doc_catalog(
+        spark, tmp_path, [(i, "one two three four") for i in range(12)], "hot"
+    )
+    emb = _emb_catalog(
+        spark, tmp_path, [(i, [0.5, -1.0, 2.0], 0) for i in range(12)], "hotv"
+    )
+    for (mod, name, _ceiling), cat in zip(_PAIR_ROWS, (docs, docs, emb)):
+        m_ = _ops(mod)
+        real, calls = m_.spread, []
+        with monkeypatch.context() as m:
+            m.setattr(m_, "spread", lambda df, *a: calls.append(1) or real(df, *a))
+            out = getattr(m_, name)(cat).collect()
+        assert calls, f"{name} stayed on the driver over the pair ceiling"
+        assert len(out) == 66, name

@@ -56,6 +56,12 @@ def test_state_broadcast_hint_is_size_gated(spark):
     )
 
 
+#: rows with a driver-side arm below a row ceiling: at SF_SMOKE they would
+#: plan a LocalRelation, so the ceiling is lowered to check the bucket
+#: self-join of their distributed arm
+_DISTRIBUTED_ARM = {"sim_lsh_bucket_pairs": ("similarity", "LOCAL_MAX_VECTORS")}
+
+
 @pytest.mark.parametrize(
     ("query", "allow_bnlj"),
     [
@@ -68,15 +74,27 @@ def test_state_broadcast_hint_is_size_gated(spark):
         ("ml_knn_spilltree", True),
     ],
 )
-def test_pair_kernels_plan_no_cartesian(spark, query, allow_bnlj):
+def test_pair_kernels_plan_no_cartesian(spark, monkeypatch, query, allow_bnlj):
     """The exact pair kernels are blocked equi-joins: a CartesianProduct
     (or, except for the bounded pivot fan-out, a BroadcastNestedLoopJoin)
     node in any plan phase means the blocking broke and the operator
     degraded to all-pairs row joins."""
+    import importlib
+
     from spark_ml_algo_lib_master_tongji_spark.registry import build_registry
 
+    if query in _DISTRIBUTED_ARM:
+        mod, attr = _DISTRIBUTED_ARM[query]
+        monkeypatch.setattr(
+            importlib.import_module(
+                f"spark_ml_algo_lib_master_tongji_spark.operators.{mod}"
+            ),
+            attr,
+            -1,
+        )
     df = build_registry()[query](spark, SF_SMOKE)
     plan = _full_plan(df)
+    assert "Join" in plan, f"{query} planned no join: nothing was checked"
     assert "CartesianProduct" not in plan, f"{query} planned a cartesian join"
     if not allow_bnlj:
         assert "BroadcastNestedLoopJoin" not in plan, (
